@@ -2,7 +2,7 @@ package graft
 
 import graft.config.{ConfigParser, StreamConfig, TapConfig}
 import graft.operators.StreamMaps
-import graft.sinks.{BatchManifest, BatchSink, SingerSink}
+import graft.sinks.{BatchManifest, BatchSink, ChunkBookmark, SingerSink}
 import graft.sources.StreamSource
 import graft.state.{Bookmarks, TapState}
 import graft.types.TypeMapper
@@ -41,10 +41,11 @@ object Tap {
     // source could commit rows between two lazy executions; the
     // reference derives state from processed records, singer_sdk
     // _sync_records). Each sink therefore executes the stream exactly
-    // ONCE: SingerSink tracks max(rep_key) inside the emit pass, and
-    // batch mode reads the max back from the files just written —
-    // no full-stream persist, which at a 100 TB extraction would
-    // materialize the whole stream on executor storage.
+    // ONCE and tracks max(rep_key) inside that pass: SingerSink in its
+    // emit loop, BatchSink in the writers of its chunk files — no
+    // full-stream persist, which at a 100 TB extraction would
+    // materialize the whole stream on executor storage, and no second
+    // pass over the output.
     // Execution-mode dispatch (config key `execution`): native Catalyst,
     // JDBC pushdown, or auto (native with pushdown fallback for SQL
     // Spark can't parse — the reference's execute-anything contract,
@@ -93,12 +94,18 @@ object Tap {
               spark.sparkContext.setLocalProperty(
                 "spark.scheduler.pool", s"graft-sync-${i % par}")
               val (df, emitStream, _) = planStream(s, state0)
-              (s, emitStream, df, BatchSink.write(df, emitStream, bc))
+              (s, emitStream, BatchSink.write(df, emitStream, bc))
             }
-          }.map(Await.result(_, Duration.Inf))
-          written.map { case (s, emitStream, df, manifests) =>
-            state = emitBatchManifests(spark, s, emitStream, df, manifests,
-              state, out)
+          }.map(f => Await.ready(f, Duration.Inf).value.get)
+          // Every write has settled, so none can still rename chunks into
+          // the root. If one failed, nothing was announced: delete what
+          // the others wrote and fail the sync with the first error.
+          written.collectFirst { case scala.util.Failure(e) => e }.foreach { e =>
+            written.foreach(_.foreach { case (_, _, ms) => BatchSink.discard(spark, ms) })
+            throw e
+          }
+          written.map(_.get).map { case (s, emitStream, manifests) =>
+            state = emitBatchManifests(s, emitStream, manifests, state, out)
             StreamResult(s, -1, manifests)
           }
         } finally pool.shutdown()
@@ -107,7 +114,7 @@ object Tap {
         tap.batchConfig match {
           case Some(bc) =>
             val manifests = BatchSink.write(df, emitStream, bc)
-            state = emitBatchManifests(spark, s, emitStream, df, manifests, state, out)
+            state = emitBatchManifests(s, emitStream, manifests, state, out)
             StreamResult(s, -1, manifests)
           case None =>
             // a mapped stream's SCHEMA reflects the transformed shape
@@ -149,61 +156,34 @@ object Tap {
   }
 
   /** Batch-mode emission: one BATCH message per manifest, each followed by
-    * a STATE whose bookmark covers exactly the manifests ANNOUNCED so far —
-    * a target that persists the last STATE line before a crash resumes from
-    * the last chunk it actually received, never skipping one it didn't.
-    *
-    * The bookmark derives from the immutable JSONL files the sink just
-    * wrote (provably matches emitted rows without re-executing a possibly
-    * nondeterministic source): ONE distributed read-back computes the
-    * per-file max grouped by `input_file_name`, and the driver folds the
-    * cumulative max across manifests — O(#files) driver state, which is
-    * manifest metadata, not data. `timestampFormat` matches the sink's so
-    * temporal rep keys round-trip exactly.
+    * a STATE. Every chunk is already durable, and its manifest carries the
+    * max replication key of its own rows (tracked by BatchSink while
+    * writing it), so the driver folds O(#files) values here — no Spark
+    * job. As in Singer mode, only a sorted stream commits the max over
+    * the chunks announced so far after each one: a target that persists
+    * that STATE and crashes resumes past exactly the chunks it received.
+    * An unsorted stream may hold smaller keys in later chunks, so its
+    * mid-stream STATEs carry progress markers and the bookmark is
+    * committed only after its last manifest.
     */
-  private def emitBatchManifests(spark: SparkSession, s: StreamConfig,
-                                 emitStream: StreamConfig, df: DataFrame,
+  private def emitBatchManifests(s: StreamConfig, emitStream: StreamConfig,
                                  manifests: Seq[BatchManifest],
                                  state0: TapState, out: PrintStream): TapState = {
-    import org.apache.spark.sql.functions.{col, input_file_name, max}
-    def fileName(uri: String): String = uri.substring(uri.lastIndexOf('/') + 1)
     var state = state0
-    val files = manifests.flatMap(_.files)
-    // (native max for type-correct ordering, its string cast for the
-    // bookmark) per written file — string rep keys compare as UTF8String
-    // to agree with Spark's max() byte order (see SingerSink.emitRecords)
-    val maxByFile: Map[String, (AnyRef, String)] = s.replicationKey match {
-      case Some(k) if files.nonEmpty =>
-        spark.read.schema(df.schema)
-          .option("timestampFormat", graft.operators.Conformance.IsoTimestampPattern)
-          .json(files: _*)
-          .groupBy(input_file_name().as("__file"))
-          .agg(max(col(k)).as("rk"), max(col(k)).cast("string").as("rks"))
-          .collect()
-          .filterNot(_.isNullAt(1))
-          .map { r =>
-            val v = r.get(1) match {
-              case str: String =>
-                org.apache.spark.unsafe.types.UTF8String.fromString(str)
-              case other => other.asInstanceOf[AnyRef]
-            }
-            fileName(r.getString(0)) -> (v, r.getString(2))
-          }.toMap
-      case _ => Map.empty
-    }
-    var best: AnyRef = null
-    var bestStr: String = null
+    var best: Option[ChunkBookmark] = None
     manifests.foreach { m =>
       SingerSink.emitBatch(emitStream, m, out)
-      m.files.flatMap(f => maxByFile.get(fileName(f))).foreach { case (v, vs) =>
-        if (best == null || v.asInstanceOf[Comparable[AnyRef]].compareTo(best) > 0) {
-          best = v; bestStr = vs
-        }
+      best = (best ++ m.bookmark).reduceOption(_ max _)
+      (best, s.replicationKey) match {
+        case (Some(b), Some(k)) if !s.isSorted =>
+          SingerSink.emitStateProgress(state, s.streamId, k, b.value, out)
+        case (Some(b), _) =>
+          state = state.advanced(s.streamId, b.value)
+          SingerSink.emitState(state, out)
+        case _ => SingerSink.emitState(state, out)
       }
-      if (bestStr != null) state = state.advanced(s.streamId, bestStr)
-      SingerSink.emitState(state, out)
     }
-    state
+    best.fold(state)(b => state.advanced(s.streamId, b.value))
   }
 
   /** Parse a (possibly user-edited) Singer catalog and return the selected

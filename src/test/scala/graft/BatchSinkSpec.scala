@@ -1,8 +1,10 @@
 package graft
 
 import graft.config.{BatchConfig, BatchEncoding, BatchStorage, ConfigParser}
+import graft.operators.Conformance
 import graft.sinks.BatchSink
 import graft.sources.StreamSource
+import graft.state.Bookmarks
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.file.{Files, Paths}
 import java.util.zip.GZIPInputStream
@@ -90,5 +92,83 @@ class BatchSinkSpec extends AnyFunSuite {
     val total = Files.list(Paths.get(tmp)).iterator.asScala
       .count(_.getFileName.toString.endsWith(".json.gz"))
     assert(total === 3)
+  }
+
+  // The per-file bookmark is tracked inside the write. Oracle: read the
+  // written files back and take Spark's max(k) per file, cast to string.
+  // Keys are permuted so a file's max is not its last row, and nulls are
+  // mixed in.
+  test("in-write per-file bookmark equals max(k) read back from the files") {
+    import org.apache.spark.sql.functions.{col, input_file_name, max}
+    val p = "((id * 7) % 20)"
+    val keys = Seq(
+      "bigint" -> s"CASE WHEN $p % 6 = 5 THEN NULL ELSE CAST($p - 5 AS BIGINT) END",
+      "double" -> s"CAST($p AS DOUBLE) / 3 - 2.5",
+      "decimal(12,3)" -> s"CAST($p / 7 - 1 AS DECIMAL(12,3))",
+      // U+1F600 sorts above U+FFFD by code point (Spark's order) but below
+      // it by UTF-16 code unit (java.lang.String's)
+      "text" -> (s"CASE WHEN $p % 4 = 0 THEN concat('\uD83D\uDE00', $p) " +
+        s"WHEN $p % 4 = 1 THEN concat('\uFFFD', $p) " +
+        s"WHEN $p % 4 = 2 THEN NULL ELSE concat('a', $p) END"),
+      "date" -> s"date_add(DATE'2024-01-30', CAST($p AS INT))",
+      "datetime" -> s"timestamp_micros(1700000000000000 + $p * 1000001)")
+    for ((typ, expr) <- keys) {
+      val tmp = Files.createTempDirectory("graft-batch-maxkey").toString
+      val s = ConfigParser.parseStream(
+        s"""{"name":"mk","sql":"SELECT 1","key_properties":["id"],
+           |"replication_key":"k","batch_size":4,
+           |"columns":[{"name":"k","type":"$typ"},{"name":"id","type":"bigint"}]}""".stripMargin)
+      val df = Conformance.conform(
+        spark.range(0, 20, 1, 2).selectExpr(s"$expr AS k", "id"), s.columns, s.name)
+      assert(df.rdd.getNumPartitions >= 2)
+      val manifests = BatchSink.write(df, s,
+        BatchConfig(BatchEncoding("jsonl", "gzip"), BatchStorage(s"file://$tmp")))
+      assert(manifests.size >= 3, typ) // 10 rows per partition → 4/4/2
+      def name(uri: String) = uri.substring(uri.lastIndexOf('/') + 1)
+      val oracle: Map[String, String] = spark.read.schema(df.schema)
+        .option("timestampFormat", Conformance.IsoTimestampPattern)
+        .json(manifests.flatMap(_.files): _*)
+        .groupBy(input_file_name().as("f"))
+        .agg(max(col("k")).cast("string").as("m"))
+        .collect().map(r => name(r.getString(0)) -> r.getString(1)).toMap
+      manifests.foreach { m =>
+        val f = name(m.files.head)
+        assert(m.bookmark.map(_.value) === oracle.get(f).flatMap(Option(_)), s"$typ $f")
+      }
+      // the driver-side fold over chunks equals the whole-stream max
+      val whole = df.agg(max(col("k")).cast("string")).head.getString(0)
+      assert(manifests.flatMap(_.bookmark).reduce(_ max _).value === whole, typ)
+    }
+  }
+
+  // An empty stream and a stream whose replication key is always null
+  // write chunks without a bookmark, and the sync leaves their state alone.
+  test("empty and all-null replication-key streams carry no bookmark") {
+    val tmp = Files.createTempDirectory("graft-batch-nokey").toString
+    val tap = ConfigParser.parseTap(
+      s"""{"database":"db1",
+         |"batch_config":{"encoding":{"format":"jsonl","compression":"gzip"},
+         |  "storage":{"root":"file://$tmp"}},
+         |"streams":[
+         |{"name":"empty","sql":"SELECT id FROM range(0)",
+         | "key_properties":["id"],"replication_key":"id","replication_key_value_start":-1,
+         | "columns":[{"name":"id","type":"bigint"}]},
+         |{"name":"nulls","sql":"SELECT id, CAST(NULL AS BIGINT) AS k FROM range(5)",
+         | "key_properties":["id"],"replication_key":"k","replication_key_value_start":-1,
+         | "columns":[{"name":"id","type":"bigint"},{"name":"k","type":"bigint"}]}
+         |]}""".stripMargin)
+    val statePath = Files.createTempDirectory("graft-batch-nokey-state").resolve("state.json")
+    val before = """{"bookmarks":{"db1-public-other":{"replication_key_value":"7"}}}"""
+    Files.writeString(statePath, before)
+    val buf = new java.io.ByteArrayOutputStream()
+    val (res, st) = Tap.syncAll(spark, tap, Some(statePath.toString),
+      new java.io.PrintStream(buf, true, "UTF-8"))
+    assert(res(1).manifests.nonEmpty)
+    assert(res.flatMap(_.manifests).forall(_.bookmark.isEmpty))
+    assert(st.bookmarks === Map("db1-public-other" -> "7"))
+    assert(Bookmarks.load(statePath.toString).bookmarks === st.bookmarks)
+    val states = buf.toString("UTF-8").split("\n").filter(_.contains(""""type":"STATE""""))
+    assert(states.nonEmpty && states.forall(l =>
+      !l.contains("db1-public-empty") && !l.contains("db1-public-nulls")))
   }
 }

@@ -5,6 +5,7 @@ import graft.state.Bookmarks
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** End-to-end tap orchestration: multi-stream sync, state advance across
   * runs (resumable incremental — the reference's core behavior), catalog
@@ -241,10 +242,10 @@ class TapSpec extends AnyFunSuite {
     assert(last.contains(""""replication_key_value":"4""""))
   }
 
-  // Batch mode re-reads max(rep_key) from the immutable files the sink
-  // just wrote — the stream itself executes exactly once, and temporal rep
-  // keys round-trip through the sink's ISO timestampFormat back to the
-  // exact Spark string-cast bookmark rendering.
+  // Batch mode takes max(rep_key) of each file inside the write that
+  // produced it — the stream executes exactly once, and temporal rep keys
+  // get the exact Spark string-cast bookmark rendering. b1 is declared
+  // sorted, so every STATE commits the max over the chunks announced.
   test("batch mode derives bookmark from the files just written") {
     val tmp = Files.createTempDirectory("graft-batch-state").toString
     val tap = ConfigParser.parseTap(
@@ -254,7 +255,7 @@ class TapSpec extends AnyFunSuite {
          |"streams":[
          |{"name":"b1","sql":"SELECT id FROM range(7) WHERE id > :rep_key_val",
          | "key_properties":["id"],"replication_key":"id","replication_key_value_start":-1,
-         | "columns":[{"name":"id","type":"bigint"}]},
+         | "is_sorted":true,"columns":[{"name":"id","type":"bigint"}]},
          |{"name":"b2","sql":"SELECT timestamptz '2021-11-22T11:45:11.062824+00:00' AS ts",
          | "key_properties":["ts"],"replication_key":"ts",
          | "replication_key_value_start":"1970-01-01",
@@ -281,6 +282,128 @@ class TapSpec extends AnyFunSuite {
     val firstBatch = lines.indexWhere(_.contains(""""type":"BATCH""""))
     assert(lines(firstBatch + 1).contains(""""type":"STATE""""),
       "each BATCH message is followed by its STATE")
+  }
+
+  // An UNSORTED batch stream: a later chunk may hold smaller keys than an
+  // earlier one, so the STATE after each BATCH carries progress markers
+  // only, and the bookmark is committed after the stream's last chunk.
+  // Keys descend across chunks here: committing the running max after the
+  // first chunk would let a resume skip every later one.
+  test("unsorted batch stream: STATE between manifests uses progress markers") {
+    val tmp = Files.createTempDirectory("graft-batch-unsorted").toString
+    val tap = ConfigParser.parseTap(
+      s"""{"database":"db1",
+         |"batch_config":{"encoding":{"format":"jsonl","compression":"gzip"},
+         |  "storage":{"root":"file://$tmp"}},
+         |"streams":[
+         |{"name":"ub","sql":"SELECT 9 - id AS id FROM range(10)","batch_size":2,
+         | "key_properties":["id"],"replication_key":"id","replication_key_value_start":-1,
+         | "columns":[{"name":"id","type":"bigint"}]}]}""".stripMargin)
+    val buf = new ByteArrayOutputStream()
+    val (res, st) = Tap.syncAll(spark, tap, None, new PrintStream(buf, true, "UTF-8"))
+    assert(res.head.manifests.size >= 3)
+    val lines = buf.toString("UTF-8").split("\n")
+    val states = lines.filter(_.contains(""""type":"STATE""""))
+    val (mids, last) = (states.init, states.last)
+    assert(mids.length === res.head.manifests.size)
+    assert(mids.forall(_.contains(""""progress_markers"""")))
+    assert(mids.head.contains(""""replication_key_value":"9""""))
+    mids.foreach { m =>
+      val p = Files.createTempFile("mid-state", ".json")
+      Files.writeString(p, stateValue(m))
+      assert(Bookmarks.load(p.toString).bookmark("db1-public-ub") === None,
+        "progress markers must not act as a resumable bookmark")
+    }
+    assert(!last.contains("progress_markers"))
+    assert(last.contains(""""replication_key_value":"9""""))
+    assert(st.bookmark("db1-public-ub") === Some("9"))
+  }
+
+  // A write that fails (here: a temp function throwing on one row) must
+  // leave nothing behind: no BATCH or STATE line, the state file as it
+  // was, and no chunk or staging file under the root — also when the other
+  // streams of a concurrent sync wrote their chunks successfully.
+  test("failed batch write: nothing announced, state unchanged, root clean") {
+    spark.udf.register("graft_fail_on_3", (x: Long) =>
+      if (x == 3) throw new IllegalStateException("row 3 is poisoned") else x)
+    def stream(name: String, sql: String) =
+      s"""{"name":"$name","sql":"$sql","batch_size":2,
+         | "key_properties":["id"],"replication_key":"id","replication_key_value_start":-1,
+         | "columns":[{"name":"id","type":"bigint"}]}""".stripMargin
+    for (par <- Seq(1, 3)) {
+      val tmp = Files.createTempDirectory(s"graft-batch-fail$par")
+      val tap = ConfigParser.parseTap(
+        s"""{"database":"db1","sync_parallelism":$par,
+           |"batch_config":{"encoding":{"format":"jsonl","compression":"gzip"},
+           |  "storage":{"root":"file://$tmp"}},
+           |"streams":[
+           |${stream("bad", "SELECT graft_fail_on_3(id) AS id FROM range(8)")},
+           |${stream("ok1", "SELECT id FROM range(8)")},
+           |${stream("ok2", "SELECT id * 2 AS id FROM range(8)")}
+           |]}""".stripMargin)
+      val statePath = Files.createTempDirectory("graft-batch-fail-state").resolve("state.json")
+      val before = """{"bookmarks":{"db1-public-ok1":{"replication_key_value":"-1"}}}"""
+      Files.writeString(statePath, before)
+      val buf = new ByteArrayOutputStream()
+      val e = intercept[Exception](Tap.syncAll(spark, tap, Some(statePath.toString),
+        new PrintStream(buf, true, "UTF-8")))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("row 3 is poisoned")), s"par=$par")
+      assert(buf.toString("UTF-8").isEmpty, s"par=$par: nothing may be emitted")
+      assert(Files.readString(statePath) === before, s"par=$par")
+      val left = Files.walk(tmp).iterator.asScala.filterNot(_ == tmp).toList
+      assert(left.isEmpty, s"par=$par: debris under the batch root: $left")
+    }
+  }
+
+  // One incremental stream in BATCH mode costs one Spark job — the write.
+  // The bookmark comes out of that job, so no job may run from Tap.scala.
+  // Jobs are counted by a listener filtered to this test's job group;
+  // a marker job in a second group proves the listener has seen them all.
+  test("batch sync of one incremental stream runs exactly one Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val tmp = Files.createTempDirectory("graft-batch-jobs").toString
+    val tap = ConfigParser.parseTap(
+      s"""{"database":"db1",
+         |"batch_config":{"encoding":{"format":"jsonl","compression":"gzip"},
+         |  "storage":{"root":"file://$tmp"}},
+         |"streams":[
+         |{"name":"j1","sql":"SELECT id FROM range(50) WHERE id > :rep_key_val","batch_size":10,
+         | "key_properties":["id"],"replication_key":"id","replication_key_value_start":-1,
+         | "columns":[{"name":"id","type":"bigint"}]}]}""".stripMargin)
+    val group = s"graft-jobcount-${java.util.UUID.randomUUID()}"
+    val marker = group + "-marker"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => sites.add(e.stageInfos.map(_.details).mkString("\n"))
+          case `marker` => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "batch job count")
+      val (res, st) = Tap.syncAll(spark, tap, None,
+        new PrintStream(new ByteArrayOutputStream(), true, "UTF-8"))
+      assert(res.head.manifests.size >= 2)
+      assert(st.bookmark("db1-public-j1") === Some("49"))
+      sc.setJobGroup(marker, "listener barrier")
+      spark.range(1).count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val jobs = sites.asScala.toList
+    assert(jobs.size === 1, jobs.mkString("\n---\n"))
+    // the first program frame of the job's call site is the sink's write
+    val firstProgramFrame = jobs.head.linesIterator.map(_.trim)
+      .find(_.startsWith("graft.")).getOrElse("")
+    assert(firstProgramFrame.startsWith("graft.sinks.BatchSink"), jobs.head)
   }
 
   // sync_parallelism (VERDICT r10 item 7): three streams extract
