@@ -16,7 +16,9 @@ import java.io.PrintStream
   */
 object Tap {
 
-  /** Result of one stream sync. */
+  /** Result of one stream sync: `records` counts the RECORD messages, or
+    * in batch mode the rows of the announced chunk files.
+    */
   final case class StreamResult(stream: StreamConfig, records: Long,
                                 manifests: Seq[BatchManifest])
 
@@ -106,7 +108,7 @@ object Tap {
           }
           written.map(_.get).map { case (s, emitStream, manifests) =>
             state = emitBatchManifests(s, emitStream, manifests, state, out)
-            StreamResult(s, -1, manifests)
+            StreamResult(s, manifests.map(_.records).sum, manifests)
           }
         } finally pool.shutdown()
       case _ => active.map { s =>
@@ -115,7 +117,7 @@ object Tap {
           case Some(bc) =>
             val manifests = BatchSink.write(df, emitStream, bc)
             state = emitBatchManifests(s, emitStream, manifests, state, out)
-            StreamResult(s, -1, manifests)
+            StreamResult(s, manifests.map(_.records).sum, manifests)
           case None =>
             // a mapped stream's SCHEMA reflects the transformed shape
             val schemaJson = smap.map(_ =>

@@ -8,8 +8,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.{FileFormat, OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.util.CollectionAccumulator
 import java.util.UUID
@@ -18,12 +21,12 @@ import scala.jdk.CollectionConverters._
 
 /** One emitted batch manifest: encoding + the files of one chunk
   * (reference: tap_rawpostgresql/client.py:234,245 yields
-  * `(encoding, [file_url])` per chunk), plus the largest replication-key
-  * value among the chunk's records (None without a replication key, or
-  * when every key in the chunk is null).
+  * `(encoding, [file_url])` per chunk), the number of records in them, and
+  * the largest replication-key value among those records (None without a
+  * replication key, or when every key in the chunk is null).
   */
 final case class BatchManifest(format: String, compression: String, files: Seq[String],
-                               bookmark: Option[ChunkBookmark] = None)
+                               records: Long, bookmark: Option[ChunkBookmark] = None)
 
 /** The largest replication-key value of one chunk, as Spark's `max()`
   * returns it: `key` is the Catalyst value of `dataType` (what orders),
@@ -34,6 +37,13 @@ final case class ChunkBookmark(value: String, key: Any, dataType: DataType) {
   def max(that: ChunkBookmark): ChunkBookmark =
     if (TypeUtils.getInterpretedOrdering(dataType).gt(that.key, key)) that else this
 }
+
+/** What the writer of one staged part file saw: its row count and, for a
+  * stream with a replication key, the key's max (None when it was always
+  * null).
+  */
+private[sinks] final case class ChunkStats(file: String, rows: Long,
+                                           bookmark: Option[ChunkBookmark])
 
 /** Batch sink: gzip-compressed JSONL files of at most `batchSize` records,
   * named `{prefix}{tap}--{stream}-{uuid4}-{i}.json.gz`.
@@ -52,13 +62,29 @@ final case class ChunkBookmark(value: String, key: Any, dataType: DataType) {
   * the reference filename scheme is a metadata operation on that same
   * filesystem.
   *
-  * The bookmark comes from the write itself, as the reference takes it
-  * from the records it processed: for a stream with a replication key the
-  * write goes through [[MaxKeyJsonFormat]], whose writers fold the key's
-  * max over the rows of each file they write. The stream executes once —
-  * no persist, no second pass over the written files — and the per-file
-  * maxima arrive through an accumulator, which Spark merges only from the
-  * task attempts that succeeded, i.e. exactly the committed files.
+  * Spread: an unsorted stream with a replication key whose plan has fewer
+  * partitions than `defaultParallelism` (a single parquet row group, a
+  * one-partition JDBC read) is hash-partitioned on its key into
+  * `defaultParallelism` partitions, so its JSON encoding and gzip run on
+  * every core instead of one. Hashing is deterministic under task retries,
+  * and the rows one source task sends a partition keep their source order
+  * (so gzip compresses them as well as before). The shuffle sits
+  * downstream of the one scan, so the source still executes once: a map
+  * stage, then the write. A spread stream of n records writes at most
+  * ⌈n / batch_size⌉ + defaultParallelism − 1 chunks, each with at most
+  * `batch_size` records. A sorted stream is never spread: its committed
+  * per-chunk bookmarks need chunk order to be key order. A plan that
+  * already shuffles or has subqueries is left as planned, since its
+  * partition count is known only after its stages run.
+  *
+  * The bookmark and the record counts come from the write itself, as the
+  * reference takes them from the records it processed: every stream is
+  * written through [[ChunkJsonFormat]], whose writers count the rows of
+  * each file and fold the replication key's max over them. The stream
+  * executes once — no persist, no second pass over the written files —
+  * and the per-file figures arrive through an accumulator, which Spark
+  * merges only from the task attempts that succeeded, i.e. exactly the
+  * committed files.
   */
 object BatchSink {
 
@@ -77,49 +103,85 @@ object BatchSink {
       root.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
     fs.mkdirs(root)
     val outDir = new HadoopPath(root, s"graft-batch-${UUID.randomUUID()}")
-    val maxKeys = stream.replicationKey.map(_ =>
-      df.sparkSession.sparkContext.collectionAccumulator[MaxKeyJsonFormat.FileMax])
+    val chunks = df.sparkSession.sparkContext.collectionAccumulator[ChunkStats]
     val token = UUID.randomUUID().toString
-    maxKeys.foreach(MaxKeyJsonFormat.register(token, _))
+    ChunkJsonFormat.register(token, chunks)
     try {
-      val writer = df.write
+      val writer = spread(df, stream).write
+        .format(classOf[ChunkJsonFormat].getName)
+        .option(ChunkJsonFormat.TokenOption, token)
         .option("maxRecordsPerFile", stream.batchSize.toString)
         .option("timestampFormat", Conformance.IsoTimestampPattern)
       val compressed = if (gzip) writer.option("compression", "gzip") else writer
-      (stream.replicationKey match {
-        case Some(k) => compressed.format(classOf[MaxKeyJsonFormat].getName)
-          .option(MaxKeyJsonFormat.KeyOption, k)
-          .option(MaxKeyJsonFormat.TokenOption, token)
-        case None => compressed.format("json")
-      }).save(outDir.toString)
+      stream.replicationKey.fold(compressed)(compressed.option(ChunkJsonFormat.KeyOption, _))
+        .save(outDir.toString)
 
-      // staged part-file name -> that file's max replication key
-      val bookmarks: Map[String, ChunkBookmark] = maxKeys.toSeq
-        .flatMap(_.value.asScala)
-        .map { case (file, key, value, dt) => file -> ChunkBookmark(value, key, dt) }
-        .toMap
-
+      // staged part-file name -> what its writer saw
+      val stats: Map[String, ChunkStats] =
+        chunks.value.asScala.map(c => c.file -> c).toMap
       val ext = if (gzip) ".json.gz" else ".json"
       val parts = fs.listStatus(outDir).map(_.getPath)
         .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(ext))
-        .sortBy(_.getName)
+        .sortBy(p => chunkOrder(p.getName))
+        .map(p => p -> stats.getOrElse(p.getName,
+          throw new IllegalStateException(s"no writer reported $p")))
         .toSeq
+      // Spark writes a file for task 0 even when that task has no rows.
+      // Announce it only for an empty stream, which is that one file; in a
+      // non-empty stream it stays staged and goes with the staging dir.
+      val kept = if (parts.exists(_._2.rows > 0)) parts.filter(_._2.rows > 0) else parts
 
       val syncId = UUID.randomUUID().toString
       // one manifest per chunk file, matching the reference's per-chunk yield
-      parts.zipWithIndex.map { case (p, i) =>
+      kept.zipWithIndex.map { case ((p, chunk), i) =>
         val name = s"${batch.storage.prefix}$tapName--${stream.name}-$syncId-$i$ext"
         val target = new HadoopPath(root, name)
         if (!fs.rename(p, target))
           throw new java.io.IOException(s"rename $p -> $target failed")
         BatchManifest(batch.encoding.format, appliedCompression,
-          Seq(target.toUri.toString), bookmarks.get(p.getName))
+          Seq(target.toUri.toString), chunk.rows, chunk.bookmark)
       }
     } finally {
-      MaxKeyJsonFormat.release(token)
-      fs.delete(outDir, true) // _SUCCESS + any stragglers, or a failed write
+      ChunkJsonFormat.release(token)
+      fs.delete(outDir, true) // _SUCCESS, empty part files, or a failed write
     }
   }
+
+  /** The frame to write: `df`, or `df` hash-partitioned on its replication
+    * key across every core when the spread rule holds (see [[BatchSink]]).
+    */
+  private def spread(df: DataFrame, stream: StreamConfig): DataFrame = {
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    stream.replicationKey match {
+      case Some(k) if !stream.isSorted && plannedPartitions(df).exists(_ < par) =>
+        df.repartition(par, col(k))
+      case _ => df
+    }
+  }
+
+  /** The partition count of `df`'s physical plan, when building its RDD
+    * runs no job. An exchange or a subquery needs one: adaptive execution
+    * sizes its final stage only after running the ones before, and a
+    * broadcast or subquery starts as soon as the plan is prepared.
+    */
+  private def plannedPartitions(df: DataFrame): Option[Int] = {
+    val plan = df.queryExecution.executedPlan
+    val runsJobs = plan.isInstanceOf[AdaptiveSparkPlanExec] ||
+      plan.exists(p => p.isInstanceOf[Exchange] || p.subqueries.nonEmpty)
+    if (runsJobs) None else Some(plan.execute().getNumPartitions)
+  }
+
+  /** Sort key of a staged part file, `part-<task>-<job uuid>-c<n><ext>`:
+    * task, then the file's number within the task, compared as numbers
+    * (`c1000` follows `c999`). A sorted stream's chunk order is its key
+    * order only under this ordering.
+    */
+  private def chunkOrder(name: String): (Long, Long, String) = name match {
+    case PartFile(task, n) => (task.toLong, n.toLong, name)
+    case _ => (Long.MaxValue, Long.MaxValue, name)
+  }
+
+  private val PartFile = """part-(\d+)-.*-c(\d+)\..*""".r
 
   /** Delete the chunk files of manifests that were written but will never
     * be announced (another stream of the same sync failed).
@@ -133,14 +195,15 @@ object BatchSink {
   }
 }
 
-/** Spark's JSON file format, whose writers also track the largest value of
-  * one column per written file. Everything else — options, codec, the
-  * commit protocol, the bytes written — is `JsonFileFormat`'s. Options:
-  * [[MaxKeyJsonFormat.KeyOption]] names the column,
-  * [[MaxKeyJsonFormat.TokenOption]] the registered accumulator that
-  * receives one [[MaxKeyJsonFormat.FileMax]] per file with a non-null max.
+/** Spark's JSON file format, whose writers also count the rows of each
+  * file and, optionally, track the largest value of one column in it.
+  * Everything else — options, codec, the commit protocol, the bytes
+  * written — is `JsonFileFormat`'s. Options:
+  * [[ChunkJsonFormat.TokenOption]] names the registered accumulator that
+  * receives one [[ChunkStats]] per file; [[ChunkJsonFormat.KeyOption]],
+  * when set, the column whose max each file reports.
   */
-class MaxKeyJsonFormat extends FileFormat {
+class ChunkJsonFormat extends FileFormat {
   private val json = new JsonFileFormat
 
   override def inferSchema(spark: SparkSession, options: Map[String, String],
@@ -153,46 +216,45 @@ class MaxKeyJsonFormat extends FileFormat {
   override def prepareWrite(spark: SparkSession, job: Job,
                             options: Map[String, String],
                             dataSchema: StructType): OutputWriterFactory = {
-    val key = options(MaxKeyJsonFormat.KeyOption)
     val resolver = spark.sessionState.conf.resolver
-    val ordinal = dataSchema.fieldNames.indexWhere(resolver(_, key))
-    require(ordinal >= 0, s"replication key '$key' is not a written column")
-    MaxKeyWriterFactory(
-      json.prepareWrite(spark, job, options, dataSchema),
-      ordinal, dataSchema(ordinal).dataType,
+    val key = options.get(ChunkJsonFormat.KeyOption).map { k =>
+      val ordinal = dataSchema.fieldNames.indexWhere(resolver(_, k))
+      require(ordinal >= 0, s"replication key '$k' is not a written column")
+      ordinal -> dataSchema(ordinal).dataType
+    }
+    ChunkWriterFactory(
+      json.prepareWrite(spark, job, options, dataSchema), key,
       spark.sessionState.conf.sessionLocalTimeZone,
-      MaxKeyJsonFormat.registered(options(MaxKeyJsonFormat.TokenOption)))
+      ChunkJsonFormat.registered(options(ChunkJsonFormat.TokenOption)))
   }
 
   // Spark names the format by toString in plans and schema errors
   override def toString: String = "JSON"
 }
 
-object MaxKeyJsonFormat {
-  /** (part-file name, max key as a Catalyst value, its string cast, key type) */
-  type FileMax = (String, Any, String, DataType)
-
-  val KeyOption = "graft.maxKey.column"
-  val TokenOption = "graft.maxKey.token"
+object ChunkJsonFormat {
+  val KeyOption = "graft.chunk.maxKey"
+  val TokenOption = "graft.chunk.token"
 
   // Driver-side hand-off from `BatchSink.write` to `prepareWrite`, which
   // Spark calls on a format instance it creates from the class name.
   private val accumulators =
-    new ConcurrentHashMap[String, CollectionAccumulator[FileMax]]()
+    new ConcurrentHashMap[String, CollectionAccumulator[ChunkStats]]()
 
-  private[sinks] def register(token: String, acc: CollectionAccumulator[FileMax]): Unit =
+  private[sinks] def register(token: String, acc: CollectionAccumulator[ChunkStats]): Unit =
     accumulators.put(token, acc)
 
   private[sinks] def release(token: String): Unit = accumulators.remove(token)
 
-  private def registered(token: String): CollectionAccumulator[FileMax] =
+  private def registered(token: String): CollectionAccumulator[ChunkStats] =
     Option(accumulators.get(token)).getOrElse(
-      throw new IllegalStateException(s"no max-key accumulator registered as $token"))
+      throw new IllegalStateException(s"no chunk accumulator registered as $token"))
 }
 
-private final case class MaxKeyWriterFactory(
-    json: OutputWriterFactory, ordinal: Int, dataType: DataType,
-    timeZone: String, maxKeys: CollectionAccumulator[MaxKeyJsonFormat.FileMax])
+/** `key`: the ordinal and type of the column whose max is tracked. */
+private final case class ChunkWriterFactory(
+    json: OutputWriterFactory, key: Option[(Int, DataType)],
+    timeZone: String, chunks: CollectionAccumulator[ChunkStats])
     extends OutputWriterFactory {
 
   override def getFileExtension(context: TaskAttemptContext): String =
@@ -200,31 +262,38 @@ private final case class MaxKeyWriterFactory(
 
   override def newInstance(path: String, dataSchema: StructType,
                            context: TaskAttemptContext): OutputWriter =
-    new MaxKeyWriter(json.newInstance(path, dataSchema, context), this)
+    new ChunkWriter(json.newInstance(path, dataSchema, context), this)
 }
 
-/** Writes through to the JSON writer and folds the key column's max with
-  * Spark's ordering; reports it when the file is complete.
+/** Writes through to the JSON writer, counts rows and folds the key
+  * column's max with Spark's ordering; reports both when the file is
+  * complete.
   */
-private final class MaxKeyWriter(json: OutputWriter, f: MaxKeyWriterFactory)
+private final class ChunkWriter(json: OutputWriter, f: ChunkWriterFactory)
     extends OutputWriter {
-  private val get = InternalRow.getAccessor(f.dataType)
-  private val ordering = TypeUtils.getInterpretedOrdering(f.dataType)
+  private val ordinal = f.key.fold(-1)(_._1)
+  private val get = f.key.map { case (_, dt) => InternalRow.getAccessor(dt) }.orNull
+  private val ordering = f.key.map { case (_, dt) => TypeUtils.getInterpretedOrdering(dt) }.orNull
+  private var rows = 0L
   private var max: Any = null
 
   override def write(row: InternalRow): Unit = {
     json.write(row)
-    val v = get(row, f.ordinal)
-    // copy: a string may point into a row buffer the caller reuses
-    if (v != null && (max == null || ordering.gt(v, max))) max = InternalRow.copyValue(v)
+    rows += 1
+    if (get != null) {
+      val v = get(row, ordinal)
+      // copy: a string may point into a row buffer the caller reuses
+      if (v != null && (max == null || ordering.gt(v, max))) max = InternalRow.copyValue(v)
+    }
   }
 
   override def close(): Unit = {
     json.close()
-    if (max != null) {
-      val rendered = Cast(Literal(max, f.dataType), StringType, Some(f.timeZone)).eval()
-      f.maxKeys.add((new HadoopPath(path()).getName, max, rendered.toString, f.dataType))
+    val bookmark = f.key.filter(_ => max != null).map { case (_, dt) =>
+      val rendered = Cast(Literal(max, dt), StringType, Some(f.timeZone)).eval()
+      ChunkBookmark(rendered.toString, max, dt)
     }
+    f.chunks.add(ChunkStats(new HadoopPath(path()).getName, rows, bookmark))
   }
 
   override def path(): String = json.path()

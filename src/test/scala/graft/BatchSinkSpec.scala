@@ -1,6 +1,6 @@
 package graft
 
-import graft.config.{BatchConfig, BatchEncoding, BatchStorage, ConfigParser}
+import graft.config.{BatchConfig, BatchEncoding, BatchStorage, ConfigParser, StreamConfig}
 import graft.operators.Conformance
 import graft.sinks.BatchSink
 import graft.sources.StreamSource
@@ -170,5 +170,99 @@ class BatchSinkSpec extends AnyFunSuite {
     val states = buf.toString("UTF-8").split("\n").filter(_.contains(""""type":"STATE""""))
     assert(states.nonEmpty && states.forall(l =>
       !l.contains("db1-public-empty") && !l.contains("db1-public-nulls")))
+  }
+
+  private def lineCounts(manifests: Seq[graft.sinks.BatchManifest]): Seq[Int] =
+    manifests.map(m => gunzipLines(Paths.get(java.net.URI.create(m.files.head)).toString).length)
+
+  // A one-partition unsorted incremental stream is hash-partitioned on its
+  // replication key across every core before the write. Oracle for the
+  // per-file bookmarks: the read-back of the in-write bookmark spec above.
+  test("unsorted one-partition stream is spread across defaultParallelism write tasks") {
+    import org.apache.spark.sql.functions.{col, input_file_name, max}
+    val par = spark.sparkContext.defaultParallelism
+    assert(par > 1)
+    val tmp = Files.createTempDirectory("graft-batch-spread").toString
+    val s = ConfigParser.parseStream(
+      """{"name":"sp","sql":"SELECT 1","key_properties":["id"],
+        |"replication_key":"k","batch_size":10,
+        |"columns":[{"name":"k","type":"bigint"},{"name":"id","type":"bigint"}]}""".stripMargin)
+    val df = Conformance.conform(spark.range(0, 40).selectExpr(
+      "CASE WHEN id % 9 = 4 THEN NULL ELSE (id * 7) % 40 END AS k", "id"),
+      s.columns, s.name).coalesce(1)
+    val (manifests, jobs) = JobProbe(spark) {
+      BatchSink.write(df, s,
+        BatchConfig(BatchEncoding("jsonl", "gzip"), BatchStorage(s"file://$tmp")))
+    }
+    assert(jobs.last.resultTasks === par, jobs)
+    val counts = lineCounts(manifests)
+    assert(counts.forall(n => n > 0 && n <= 10), counts)
+    assert(manifests.map(_.records) === counts.map(_.toLong))
+    // at most ⌈n / batch_size⌉ + par − 1 chunks
+    assert(manifests.size >= 40 / 10 && manifests.size <= 40 / 10 + par - 1, counts)
+    val files = manifests.flatMap(_.files)
+    val back = spark.read.schema(df.schema).json(files: _*)
+    assert(back.select("id").collect().map(_.getLong(0)).sorted.toSeq === (0L until 40L))
+    def name(uri: String) = uri.substring(uri.lastIndexOf('/') + 1)
+    val oracle: Map[String, String] = back
+      .groupBy(input_file_name().as("f"))
+      .agg(max(col("k")).cast("string").as("m"))
+      .collect().map(r => name(r.getString(0)) -> r.getString(1)).toMap
+    manifests.foreach { m =>
+      val f = name(m.files.head)
+      assert(m.bookmark.map(_.value) === oracle.get(f).flatMap(Option(_)), f)
+    }
+    assert(manifests.flatMap(_.bookmark).reduce(_ max _).value === "39")
+  }
+
+  // A sorted stream's committed per-chunk bookmarks need chunk order to be
+  // key order, so it keeps its one write task; its chunks are announced in
+  // the order that task wrote them, also past Spark's 3-digit file counter.
+  test("sorted one-partition stream is not spread; chunk maxima are monotone") {
+    for ((rows, size) <- Seq(40 -> 10, 1003 -> 1)) {
+      val tmp = Files.createTempDirectory("graft-batch-sorted").toString
+      val s = ConfigParser.parseStream(
+        s"""{"name":"so","sql":"SELECT 1","key_properties":["k"],
+           |"replication_key":"k","is_sorted":true,"batch_size":$size,
+           |"columns":[{"name":"k","type":"bigint"}]}""".stripMargin)
+      val df = spark.range(0, rows).selectExpr("id AS k").coalesce(1)
+      val (manifests, jobs) = JobProbe(spark) {
+        BatchSink.write(df, s,
+          BatchConfig(BatchEncoding("jsonl", "gzip"), BatchStorage(s"file://$tmp")))
+      }
+      assert(jobs.map(_.resultTasks) === Seq(1))
+      assert(manifests.size === rows / size)
+      assert(manifests.forall(_.records == size))
+      val maxima = manifests.map(_.bookmark.get.value.toLong)
+      // chunk i's max is (i + 1) * size − 1; find the first chunk where it is not
+      assert(maxima.indices.find(i => maxima(i) != (i + 1L) * size - 1) === None, rows)
+    }
+  }
+
+  // Spark writes a file for task 0 even when it has no rows. A non-empty
+  // stream announces no such file; an empty stream keeps its one file.
+  test("no zero-record chunk in a non-empty stream; an empty stream keeps one") {
+    val s = ConfigParser.parseStream(
+      """{"name":"z","sql":"SELECT 1","key_properties":["id"],"batch_size":3,
+        |"columns":[{"name":"id","type":"bigint"}]}""".stripMargin)
+    def write(df: org.apache.spark.sql.DataFrame, stream: StreamConfig = s) =
+      BatchSink.write(df, stream, BatchConfig(BatchEncoding("jsonl", "gzip"),
+        BatchStorage("file://" + Files.createTempDirectory("graft-batch-zero"))))
+    // ids 0..4 in partition 0 are filtered out; 5..9 stay in partition 1
+    val some = write(spark.range(0, 10, 1, 2).filter("id >= 5").toDF())
+    assert(lineCounts(some).sorted === Seq(2, 3))
+    assert(some.map(_.records).sum === 5)
+    val root = Paths.get(java.net.URI.create(some.head.files.head)).getParent
+    assert(Files.list(root).iterator.asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".json.gz")).toSeq.sorted ===
+      some.map(m => Paths.get(java.net.URI.create(m.files.head)).getFileName.toString).sorted)
+    val none = write(spark.range(0, 10, 1, 2).filter("id < 0").toDF())
+    assert(none.size === 1 && none.head.records === 0)
+    assert(lineCounts(none) === Seq(0))
+    // the same for an empty stream that is spread before its write
+    val spread = write(spark.range(0, 10, 1, 1).filter("id < 0").toDF(),
+      s.copy(replicationKey = Some("id")))
+    assert(spread.size === 1 && spread.head.records === 0 && spread.head.bookmark.isEmpty)
+    assert(lineCounts(spread) === Seq(0))
   }
 }

@@ -406,6 +406,31 @@ class TapSpec extends AnyFunSuite {
     assert(firstProgramFrame.startsWith("graft.sinks.BatchSink"), jobs.head)
   }
 
+  // A one-partition unsorted stream is spread before its write: still one
+  // execution of the source, now as a map stage plus the write, both
+  // started by the sink; the bookmark still needs no job from Tap.scala.
+  test("batch sync of a spread stream runs at most two Spark jobs, all from BatchSink") {
+    val tmp = Files.createTempDirectory("graft-batch-spread-jobs").toString
+    val tap = ConfigParser.parseTap(
+      s"""{"database":"db1",
+         |"batch_config":{"encoding":{"format":"jsonl","compression":"gzip"},
+         |  "storage":{"root":"file://$tmp"}},
+         |"streams":[
+         |{"name":"j2","sql":"SELECT id FROM range(0, 50, 1, 1) WHERE id > :rep_key_val","batch_size":10,
+         | "key_properties":["id"],"replication_key":"id","replication_key_value_start":-1,
+         | "columns":[{"name":"id","type":"bigint"}]}]}""".stripMargin)
+    val ((res, st), jobs) = JobProbe(spark) {
+      Tap.syncAll(spark, tap, None,
+        new PrintStream(new ByteArrayOutputStream(), true, "UTF-8"))
+    }
+    assert(res.head.records === 50)
+    assert(st.bookmark("db1-public-j2") === Some("49"))
+    assert(jobs.nonEmpty && jobs.size <= 2, jobs.mkString("\n---\n"))
+    assert(jobs.forall(_.firstProgramFrame.startsWith("graft.sinks.BatchSink")),
+      jobs.mkString("\n---\n"))
+    assert(jobs.last.resultTasks === spark.sparkContext.defaultParallelism)
+  }
+
   // sync_parallelism (VERDICT r10 item 7): three streams extract
   // concurrently in batch mode; message emission and state advancement
   // stay sequential in config order, so the output is byte-identical
