@@ -66,9 +66,13 @@ private[sinks] final case class ChunkStats(file: String, rows: Long,
   * partitions than `defaultParallelism` (a single parquet row group, a
   * one-partition JDBC read) is hash-partitioned on its key into
   * `defaultParallelism` partitions, so its JSON encoding and gzip run on
-  * every core instead of one. Hashing is deterministic under task retries,
-  * and the rows one source task sends a partition keep their source order
-  * (so gzip compresses them as well as before). The shuffle sits
+  * every core instead of one. The test is "fewer than", not "one": Spark
+  * splits a file of one row group into several partitions, and only the
+  * one holding the group's midpoint gets rows (a 10.8 MB single-group
+  * file plans 3 partitions at 4 cores, rows 0 / all / 0). Hashing is
+  * deterministic under task retries, and the rows one source task sends a
+  * partition keep their source order (so gzip compresses them as well as
+  * before). The shuffle sits
   * downstream of the one scan, so the source still executes once: a map
   * stage, then the write. A spread stream of n records writes at most
   * ⌈n / batch_size⌉ + defaultParallelism − 1 chunks, each with at most

@@ -215,6 +215,28 @@ class BatchSinkSpec extends AnyFunSuite {
     assert(manifests.flatMap(_.bookmark).reduce(_ max _).value === "39")
   }
 
+  // Spark splits a file of one row group into several partitions, and only
+  // one of them gets rows; such a stream is spread like a one-partition one.
+  test("unsorted stream planned on several partitions, rows in one, is spread") {
+    val par = spark.sparkContext.defaultParallelism
+    assert(par > 3)
+    val tmp = Files.createTempDirectory("graft-batch-splits").toString
+    val s = ConfigParser.parseStream(
+      """{"name":"sl","sql":"SELECT 1","key_properties":["k"],
+        |"replication_key":"k","batch_size":5,
+        |"columns":[{"name":"k","type":"bigint"}]}""".stripMargin)
+    // partitions hold 0..12, 13..25, 26..39; the filter keeps the first
+    val df = spark.range(0, 40, 1, 3).where("id < 13").selectExpr("id AS k")
+    val (manifests, jobs) = JobProbe(spark) {
+      BatchSink.write(df, s,
+        BatchConfig(BatchEncoding("jsonl", "gzip"), BatchStorage(s"file://$tmp")))
+    }
+    assert(jobs.last.resultTasks === par, jobs)
+    assert(manifests.forall(m => m.records > 0 && m.records <= 5))
+    assert(manifests.map(_.records).sum === 13)
+    assert(manifests.flatMap(_.bookmark).reduce(_ max _).value === "12")
+  }
+
   // A sorted stream's committed per-chunk bookmarks need chunk order to be
   // key order, so it keeps its one write task; its chunks are announced in
   // the order that task wrote them, also past Spark's 3-digit file counter.
